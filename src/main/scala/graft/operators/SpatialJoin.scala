@@ -1,87 +1,27 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Spatial join strategies.
+/** Nearest-neighbor joins: [[knn]] and [[farthestK]].
+  *
+  * Predicate joins have no API here: `a JOIN b ON ST_Intersects(a.g, b.g)`
+  * (or any supported `ST_*` predicate, or `ST_Distance(a, b) <= d`) is
+  * planned by [[graft.plans.SpatialJoinStrategy]] — a broadcast STRtree
+  * ([[graft.plans.SpatialJoinExec]]) when one side fits, a grid shuffle
+  * ([[graft.plans.GridSpatialJoinExec]]) when neither does, both refining
+  * through [[graft.plans.SpatialProbe]]. A `BROADCAST` join hint forces
+  * the broadcast build side.
   *
   * The reference ships the index primitives users compose into a join —
   * R-tree bulk-load + `intersection_candidates_with_other`
-  * (rust/geoarrow-old/src/indexed/array.rs:20-57). On Spark the same idea
-  * becomes two physical strategies:
-  *
-  *  - [[broadcast]]: the small side is broadcast through a real
-  *    `BroadcastExchange` and probed via a per-task STRtree
-  *    ([[graft.plans.SpatialJoinExec]], planned by
-  *    [[graft.plans.SpatialJoinStrategy]]). O(n log m) instead of the
-  *    O(n·m) BroadcastNestedLoopJoin Spark would plan for a θ-join on ST_*.
-  *  - [[grid]]: big×big. Both sides explode to covering grid cells,
-  *    equi-shuffle on cell id, refine with the exact predicate, and dedupe
-  *    multi-cell matches with the reference-point rule (a pair is emitted
-  *    only in the cell containing the top-left corner of the envelope
-  *    intersection) — no DISTINCT pass needed.
-  *
-  * Predicates: intersects | contains | within | covers | dwithin:<d>.
-  * `contains`/`covers`/`within` are evaluated as SMALL pred BIG
-  * (the indexed side is the predicate's first argument).
+  * (rust/geoarrow-old/src/indexed/array.rs:20-57); the nearest-neighbor
+  * joins below compose the same candidate-then-refine idea from grid
+  * rounds of increasing radius.
   */
 object SpatialJoin {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** driver-side fail-fast validation of a predicate name. */
-  private def pred(name: String): Unit = name match {
-    case "intersects" | "contains" | "covers" | "within" => ()
-    case d if d.startsWith("dwithin:") => d.stripPrefix("dwithin:").toDouble; ()
-    case other => throw new IllegalArgumentException(s"unknown spatial predicate: $other")
-  }
-
-  /** Inner join `big ⋈ small ON pred(small.geom, big.geom)` with the small
-    * side broadcast and probed through an STRtree. Column names must be
-    * disjoint.
-    *
-    * Sugar over the auto-planned path: the small side gets a broadcast
-    * hint and the predicate becomes the matching `ST_*` expression, which
-    * [[graft.plans.SpatialJoinStrategy]] plans as
-    * [[graft.plans.SpatialJoinExec]] — the build side arrives through a
-    * real `BroadcastExchange` (reused across stages, AQE-visible, no
-    * driver-side `collect()`), each task bulk-loads one STRtree over it,
-    * and output rows are `UnsafeRow`s Catalyst can prune above and below.
-    *
-    * `project` (optional) lists the output columns to keep, in order —
-    * with the planner path this is ordinary column pruning (the narrowed
-    * projection reaches inside the join), so it exists purely as API
-    * convenience. Empty = all columns of both sides. */
-  def broadcast(big: DataFrame, small: DataFrame,
-                bigGeomCol: String, smallGeomCol: String,
-                predicate: String = "intersects",
-                project: Seq[String] = Nil): DataFrame = {
-    pred(predicate) // validate on the driver: fail fast, not inside a task
-    val spark = big.sparkSession
-    graft.functions.GeoFunctions.register(spark)
-    // refuse a misjudged "small" side early with an actionable message (conf
-    // `graft.spatialJoin.maxBuildBytes`, default 512 MiB) rather than letting
-    // the broadcast build run into executor memory pressure. RDD-backed plans
-    // without stats report the defaultSizeInBytes sentinel (Long.MaxValue) —
-    // an UNKNOWN size must not refuse a legitimately tiny side, so the guard
-    // only fires on known estimates (same stance as Spark's own
-    // broadcast-hint handling).
-    val maxBuild = spark.conf.get("graft.spatialJoin.maxBuildBytes", (512L << 20).toString).toLong
-    val est = small.queryExecution.optimizedPlan.stats.sizeInBytes
-    val known = est < BigInt(Long.MaxValue) / 4
-    require(!known || est <= maxBuild,
-      s"SpatialJoin.broadcast: build side estimated at $est bytes exceeds " +
-        s"graft.spatialJoin.maxBuildBytes=$maxBuild; use SpatialJoin.grid or a " +
-        "plain `JOIN ON ST_pred(...)` (auto-planned grid join) for big×big")
-    val (fn, extra) = predicate match {
-      case d if d.startsWith("dwithin:") =>
-        ("st_dwithin", Seq(lit(d.stripPrefix("dwithin:").toDouble)))
-      case p => (s"st_$p", Nil)
-    }
-    val cond = call_function(fn, (small(smallGeomCol) +: big(bigGeomCol) +: extra): _*)
-    val joined = big.join(org.apache.spark.sql.functions.broadcast(small), cond)
-    if (project.isEmpty) joined else joined.select(project.map(col): _*)
-  }
 
   /** k-nearest-neighbor join: for every left row, the `k` right rows with
     * the smallest planar `ST_Distance`, ranked (ties broken by `rightIdCol`
@@ -249,7 +189,7 @@ object SpatialJoin {
       val csx = lit(csXv)
       val csy = lit(csYv)
       val nL = lit(nLon)
-      def wrapX(c: org.apache.spark.sql.Column) =
+      def wrapX(c: Column) =
         if (geodesic) pmod(c, nL) else c
       // unwrapped lon-cell range endpoints per side, in CELL INDEX space.
       // Geodesic upper bounds are CLAMPED to nLon consecutive cells (round
@@ -311,9 +251,8 @@ object SpatialJoin {
           val ly0 = floor((col("__lb.ymin") - csy) / csy).cast("long")
           val ly1 = floor((col("__lb.ymax") + csy) / csy).cast("long")
           val boundRow = lhs.withColumn("__lb", call_function("st_bbox", col(leftGeomCol)))
-            .agg(sum((lx1 - lx0 + 1) * (ly1 - ly0 + 1))).first()
-          val keyBound = if (boundRow.isNullAt(0)) Long.MaxValue else boundRow.getLong(0)
-          if (keyBound <= maxKeys) {
+            .agg(cellKeyBound(lx0, lx1, ly0, ly1, maxKeys)).first()
+          if (!boundRow.isNullAt(0) && boundRow.getDouble(0) <= maxKeys) {
             cellPrefilterCount.increment()
             val cells = l.select(col("__cx").as("__pcx"), col("__cy").as("__pcy")).distinct()
             rr0.join(org.apache.spark.sql.functions.broadcast(cells),
@@ -837,6 +776,18 @@ object SpatialJoin {
     }
   }
 
+  /** Sum over rows of the covering-cell count `(x1-x0+1)·(y1-y0+1)` — an
+    * upper bound on the distinct cell keys they probe. Computed in double
+    * with each row capped at `maxKeys + 1`: a span or product past the long
+    * range exceeds the bound (and skips the pre-filter) instead of throwing
+    * under ANSI or wrapping negative past the guard. */
+  private[graft] def cellKeyBound(x0: Column, x1: Column, y0: Column, y1: Column,
+                                  maxKeys: Long): Column = {
+    def span(lo: Column, hi: Column) =
+      hi.cast("double") - lo.cast("double") + 1
+    sum(least(span(x0, x1) * span(y0, y1), lit(maxKeys + 1.0)))
+  }
+
   /** WKB→meters (or planar units) distance kernel matching the SQL
     * function the grid rounds rank by — the broadcast remainder pass must
     * use the IDENTICAL metric or ranks flip at the seam between paths. */
@@ -849,40 +800,4 @@ object SpatialJoin {
       case "vincenty" => graft.core.Geodesy.distanceVincenty
       case other => throw new IllegalArgumentException(s"knn metric '$other'")
     }
-
-  /** Big×big inner join on `intersects` via grid partitioning: shuffle both
-    * sides on covering cell ids, refine exactly, dedupe with the
-    * reference-point rule. Requires disjoint column names. */
-  def grid(left: DataFrame, right: DataFrame,
-           leftGeomCol: String, rightGeomCol: String,
-           cellSize: Double): DataFrame = {
-    def cells(df: DataFrame, geomCol: String, alias: String): DataFrame = {
-      val cs = lit(cellSize)
-      df.withColumn("__bbox", call_function("st_bbox", col(geomCol)))
-        .withColumn("__cx", explode(sequence(
-          floor(col("__bbox.xmin") / cs).cast("long"),
-          floor(col("__bbox.xmax") / cs).cast("long"))))
-        .withColumn("__cy", explode(sequence(
-          floor(col("__bbox.ymin") / cs).cast("long"),
-          floor(col("__bbox.ymax") / cs).cast("long"))))
-        .withColumnRenamed("__bbox", s"__bbox_$alias")
-        .withColumnRenamed("__cx", s"__cx_$alias")
-        .withColumnRenamed("__cy", s"__cy_$alias")
-    }
-    val l = cells(left, leftGeomCol, "l")
-    val r = cells(right, rightGeomCol, "r")
-    val joined = l.join(r,
-      col("__cx_l") === col("__cx_r") && col("__cy_l") === col("__cy_r") &&
-        // bbox prefilter before the exact JTS predicate
-        col("__bbox_l.xmin") <= col("__bbox_r.xmax") &&
-        col("__bbox_r.xmin") <= col("__bbox_l.xmax") &&
-        col("__bbox_l.ymin") <= col("__bbox_r.ymax") &&
-        col("__bbox_r.ymin") <= col("__bbox_l.ymax") &&
-        // reference point: emit only from the cell holding the top-left
-        // corner of the envelope intersection (dedupe without DISTINCT)
-        floor(greatest(col("__bbox_l.xmin"), col("__bbox_r.xmin")) / lit(cellSize)).cast("long") === col("__cx_l") &&
-        floor(greatest(col("__bbox_l.ymin"), col("__bbox_r.ymin")) / lit(cellSize)).cast("long") === col("__cy_l") &&
-        call_function("st_intersects", col(leftGeomCol), col(rightGeomCol)))
-    joined.drop("__bbox_l", "__bbox_r", "__cx_l", "__cy_l", "__cx_r", "__cy_r")
-  }
 }

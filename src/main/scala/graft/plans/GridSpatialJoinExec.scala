@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.internal.SQLConf
-import org.locationtech.jts.geom.{Envelope, Geometry}
+import org.locationtech.jts.geom.Envelope
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 import org.locationtech.jts.index.strtree.STRtree
 
@@ -21,13 +21,14 @@ import graft.core.GeomOps
   * rust/geoarrow-old/src/indexed/array.rs:50-57, distributed):
   *  1. sample both children's envelope sizes (a bounded first-rows-per-
   *     partition job, the same trick Spark's RangePartitioner uses) and pick
-  *     a cell size — no hand-tuned parameter, unlike the explicit
-  *     [[graft.operators.SpatialJoin.grid]] API;
+  *     a cell size — no hand-tuned parameter;
   *  2. explode each row to the grid cells covering its envelope (left
   *     envelopes expanded by `radius` for dwithin) and shuffle both sides on
   *     the cell key — each 100 TB side moves once, keyed, never crossed;
   *  3. per cell, bulk-load an STRtree of the left rows (JTS
-  *     PreparedGeometry for the refinement), stream the right rows through;
+  *     PreparedGeometry), stream the right rows through and refine each
+  *     candidate with [[SpatialProbe]]'s test — the one the broadcast
+  *     execs use;
   *  4. emit a pair only in the cell containing the min corner of its
   *     envelope intersection (reference-point rule) — exactly-once output
   *     with no global DISTINCT pass.
@@ -54,37 +55,17 @@ case class GridSpatialJoinExec(
     predicate: String,
     radius: Double,
     projection: Option[Seq[Attribute]] = None,
-    // residual join conjuncts (deterministic, subquery-free) evaluated in
-    // the probe loop BEFORE the exact geometry predicate (round 21): a
-    // cheap row filter like DBSCAN's canonical `a.id < b.id` then skips
-    // the expensive JTS refine test for the pairs it rejects, instead of
-    // running as a FilterExec above the join after the refine already paid
+    // residual join conjuncts that cannot raise (see
+    // SpatialJoinStrategy.absorbable) evaluated in the probe loop BEFORE the
+    // exact geometry predicate (round 21): a cheap row filter like DBSCAN's
+    // canonical `a.id < b.id` then skips the expensive JTS refine test for
+    // the pairs it rejects, instead of running as a FilterExec above the
+    // join after the refine already paid
     extraCondition: Option[Expression] = None) extends BinaryExecNode {
 
   /** see [[SpatialJoinExec.output]] — narrowed to the consumed attributes */
   override def output: Seq[Attribute] =
     projection.getOrElse(left.output ++ right.output)
-
-  private def test(p: PreparedGeometry, g: Geometry): Boolean = {
-    GridSpatialJoinExec.refineTests.increment()
-    testImpl(p, g)
-  }
-
-  private def testImpl(p: PreparedGeometry, g: Geometry): Boolean = predicate match {
-    case "intersects" => p.intersects(g)
-    case "contains" => p.contains(g)
-    case "within" => p.within(g)
-    case "covers" => p.covers(g)
-    case "coveredBy" => p.coveredBy(g)
-    case "touches" => p.touches(g)
-    case "overlaps" => p.overlaps(g)
-    case "crosses" => p.crosses(g)
-    case "equalsTopo" => p.getGeometry.equalsTopo(g)
-    case "dWithin" => p.getGeometry.isWithinDistance(g, radius)
-    case n if SpatialJoinExec.isGeodesicDWithin(n) =>
-      SpatialJoinExec.geodesicTest(n, p.getGeometry, g, radius)
-    case other => throw new IllegalStateException(s"unsupported spatial predicate: $other")
-  }
 
   /** Sampled envelopes as [minX, minY, maxX, maxY, maxDim] per geometry
     * (already expanded by `expandBy`). Reads at most `rowsPerPart` rows from
@@ -110,7 +91,7 @@ case class GridSpatialJoinExec(
           if (g.isEmpty) Iterator.empty
           else {
             val e = new Envelope(g.getEnvelopeInternal)
-            SpatialJoinExec.padForRadius(e, predicate, expandBy)
+            SpatialProbe.padForRadius(e, predicate, expandBy)
             Iterator.single(Array(
               e.getMinX, e.getMinY, e.getMaxX, e.getMaxY,
               math.max(e.getWidth, e.getHeight)))
@@ -207,7 +188,7 @@ case class GridSpatialJoinExec(
             if (g.isEmpty) Iterator.empty
             else {
               val env = new Envelope(g.getEnvelopeInternal)
-              SpatialJoinExec.padForRadius(env, predicate, expandBy)
+              SpatialProbe.padForRadius(env, predicate, expandBy)
               val x0 = math.floor(env.getMinX / cs).toLong
               val x1 = math.floor(env.getMaxX / cs).toLong
               val y0 = math.floor(env.getMinY / cs).toLong
@@ -247,6 +228,7 @@ case class GridSpatialJoinExec(
     val outAttrs = output
     val joinedAttrs = left.output ++ right.output
     val extraCond = extraCondition
+    val refine = SpatialProbe(predicate, radius, buildRight = false).refine
 
     // (cell, sub, side) sort key; side 0 = build (left), 1 = probe (right)
     val lK = keyed(left, lBound, r).map { case ((cx, cy, sx, sy), row) => ((cx, cy, sx, sy, 0: Byte), row) }
@@ -286,7 +268,7 @@ case class GridSpatialJoinExec(
           // MUST match keyed()'s routing pad exactly: the reference-point
           // dedup compares this envelope's min corner against cell ids the
           // routing envelope generated
-          SpatialJoinExec.padForRadius(env, predicate, r)
+          SpatialProbe.padForRadius(env, predicate, r)
           build += ((row, prepF.create(g), env))
           Iterator.empty
         } else if (build.isEmpty) Iterator.empty
@@ -315,7 +297,7 @@ case class GridSpatialJoinExec(
                   (math.min(k - 1, math.floor((refX - cx * cs) / sub).toInt) == sx &&
                    math.min(k - 1, math.floor((refY - cy * cs) / sub).toInt) == sy)) &&
                 (extraPred == null || extraPred.eval(joined(lrow, row))) &&
-                test(pg, rg))
+                { GridSpatialJoinExec.refineTests.increment(); refine(pg, rg) })
               Iterator.single(proj(joined(lrow, row)))
             else Iterator.empty
           }

@@ -5,11 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, IdentityBroadcastMode, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.locationtech.jts.geom.{Envelope, Geometry}
-import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
-import org.locationtech.jts.index.strtree.STRtree
-
-import graft.core.GeomOps
 
 /** Broadcast-STRtree spatial join as a first-class physical operator.
   *
@@ -26,7 +21,8 @@ import graft.core.GeomOps
   *
   * `predicate` is normalized by [[SpatialJoinStrategy]] to take the LEFT
   * geometry as its first argument (GeomOps method name). `radius` > 0 only
-  * for dwithin — it expands the probe envelope.
+  * for dwithin — it expands the probe envelope. Index build and refine are
+  * [[SpatialProbe]]'s, shared with [[SpatialJoinFoldExec]].
   */
 case class SpatialJoinExec(
     left: SparkPlan,
@@ -63,74 +59,28 @@ case class SpatialJoinExec(
     if (buildRight) Seq(UnspecifiedDistribution, BroadcastDistribution(IdentityBroadcastMode))
     else Seq(BroadcastDistribution(IdentityBroadcastMode), UnspecifiedDistribution)
 
-  /** prepared(buildGeom) tested against the streamed geometry. When the
-    * build side is the predicate's FIRST argument (buildRight=false after
-    * normalization ⇒ build side is left) the prepared-geometry method
-    * applies directly; otherwise through the transpose (contains↔within,
-    * covers↔coveredBy; the rest are symmetric). */
-  private def test(p: PreparedGeometry, g: Geometry): Boolean = {
-    val name = if (buildRight) SpatialJoinExec.transpose(predicate) else predicate
-    name match {
-      case "intersects" => p.intersects(g)
-      case "contains" => p.contains(g)
-      case "within" => p.within(g)
-      case "covers" => p.covers(g)
-      case "coveredBy" => p.coveredBy(g)
-      case "touches" => p.touches(g)
-      case "overlaps" => p.overlaps(g)
-      case "crosses" => p.crosses(g)
-      case "equalsTopo" => p.getGeometry.equalsTopo(g)
-      case "dWithin" => p.getGeometry.isWithinDistance(g, radius)
-      case n if SpatialJoinExec.isGeodesicDWithin(n) =>
-        SpatialJoinExec.geodesicTest(n, p.getGeometry, g, radius)
-      case other => throw new IllegalStateException(s"unsupported spatial predicate: $other")
-    }
-  }
-
   override protected def doExecute(): RDD[InternalRow] = {
     val (buildPlan, streamPlan) = if (buildRight) (right, left) else (left, right)
     val (buildGeomE, streamGeomE) = if (buildRight) (rightGeom, leftGeom) else (leftGeom, rightGeom)
     val broadcastRows = buildPlan.executeBroadcast[Array[InternalRow]]()
     val buildGeomBound = BindReferences.bindReference(buildGeomE, buildPlan.output)
     val streamGeomBound = BindReferences.bindReference(streamGeomE, streamPlan.output)
-    val r = radius
+    val probe = SpatialProbe(predicate, radius, buildRight)
     val bRight = buildRight
     val outAttrs = output
     val joinedAttrs = left.output ++ right.output
 
     streamPlan.execute().mapPartitions { iter =>
-      val tree = new STRtree()
-      val prep = new PreparedGeometryFactory()
-      broadcastRows.value.foreach { row =>
-        val wkb = buildGeomBound.eval(row).asInstanceOf[Array[Byte]]
-        if (wkb != null) {
-          val g = GeomOps.read(wkb)
-          if (!g.isEmpty) tree.insert(g.getEnvelopeInternal, (row, prep.create(g)))
-        }
-      }
-      tree.build()
+      val rows = broadcastRows.value
+      val matches = probe.index(rows, buildGeomBound)
       val joined = new JoinedRow()
       val proj = UnsafeProjection.create(outAttrs, joinedAttrs)
+      // lazy: each next() projects into the reused UnsafeRow buffer — the
+      // doExecute contract allows row reuse, so no per-row copy
       iter.flatMap { srow =>
-        val wkb = streamGeomBound.eval(srow).asInstanceOf[Array[Byte]]
-        if (wkb == null) Iterator.empty
-        else {
-          val sg = GeomOps.read(wkb)
-          if (sg.isEmpty) Iterator.empty
-          else {
-            val env = new Envelope(sg.getEnvelopeInternal)
-            SpatialJoinExec.padForRadius(env, predicate, r)
-            val cands = tree.query(env)
-            // lazy: each next() projects into the reused UnsafeRow buffer —
-            // the doExecute contract allows row reuse, so no per-row copy
-            (0 until cands.size()).iterator.flatMap { i =>
-              val (brow, pg) = cands.get(i).asInstanceOf[(InternalRow, PreparedGeometry)]
-              if (test(pg, sg)) {
-                if (bRight) joined(srow, brow) else joined(brow, srow)
-                Iterator.single(proj(joined))
-              } else Iterator.empty
-            }
-          }
+        matches(streamGeomBound.eval(srow).asInstanceOf[Array[Byte]]).map { b =>
+          if (bRight) joined(srow, rows(b)) else joined(rows(b), srow)
+          proj(joined)
         }
       }
     }
@@ -138,83 +88,4 @@ case class SpatialJoinExec(
 
   override protected def withNewChildrenInternal(newLeft: SparkPlan, newRight: SparkPlan): SpatialJoinExec =
     copy(left = newLeft, right = newRight)
-}
-
-object SpatialJoinExec {
-  /** P(a,b) ⟺ transpose(P)(b,a). */
-  val transpose: Map[String, String] = Map(
-    "intersects" -> "intersects", "contains" -> "within", "within" -> "contains",
-    "covers" -> "coveredBy", "coveredBy" -> "covers", "touches" -> "touches",
-    "overlaps" -> "overlaps", "crosses" -> "crosses", "equalsTopo" -> "equalsTopo",
-    "dWithin" -> "dWithin",
-    // geodesic dWithin family (symmetric): planned from the edges-dispatch
-    // rewrite of ST_DWithin over stamped columns — `radius` is METERS
-    "dWithinSphere" -> "dWithinSphere", "dWithinGeodesic" -> "dWithinGeodesic",
-    "dWithinSpheroid" -> "dWithinSpheroid", "dWithinVincenty" -> "dWithinVincenty")
-
-  /** Geodesy kernel method name (as it appears in the analysis-time
-    * rewrite's StaticInvoke) → the planner's predicate name. */
-  val geodesicDistanceToPredicate: Map[String, String] = Map(
-    "distanceSphere" -> "dWithinSphere", "distanceGeodesic" -> "dWithinGeodesic",
-    "distanceSpheroid" -> "dWithinSpheroid", "distanceVincenty" -> "dWithinVincenty")
-
-  def isGeodesicDWithin(name: String): Boolean =
-    name != "dWithin" && name.startsWith("dWithin")
-
-  /** Exact geodesic dWithin test — SAME point semantics as the rewritten
-    * expression's kernels (first coordinate of each geometry, as
-    * `Geodesy.distance*` read their WKB args). */
-  def geodesicTest(name: String, a: Geometry, b: Geometry, meters: Double): Boolean = {
-    val ca = a.getCoordinate
-    val cb = b.getCoordinate
-    if (ca == null || cb == null) return false
-    val d = name match {
-      case "dWithinSphere" => graft.core.Geodesy.haversineMeters(ca.x, ca.y, cb.x, cb.y)
-      case "dWithinGeodesic" => graft.core.KarneyGeodesic.distance(ca.y, ca.x, cb.y, cb.x)
-      case "dWithinSpheroid" => graft.core.Geodesy.andoyerMeters(ca.x, ca.y, cb.x, cb.y)
-      case "dWithinVincenty" => graft.core.Geodesy.vincentyMeters(ca.x, ca.y, cb.x, cb.y)
-      case other => throw new IllegalStateException(s"not a geodesic dWithin: $other")
-    }
-    d <= meters
-  }
-
-  /** Expand a lon/lat envelope so it covers every point within `meters`
-    * of it, CONSERVATIVELY across all supported earth models: latitude
-    * degrees use the global minimum meters-per-degree (110,574 at the
-    * WGS84 equator, rounded DOWN to 110,000 for slack), longitude scales
-    * by 1/cos of the most extreme padded latitude. Pole-adjacent
-    * envelopes widen to the full longitude span (meridians converge —
-    * no bounded lon pad is correct there). Over-padding only costs extra
-    * CANDIDATES; the exact geodesic test decides membership. */
-  def padGeodesic(env: Envelope, meters: Double): Unit = {
-    val latPad = meters / 110000.0
-    val y0 = math.max(env.getMinY - latPad, -90.0)
-    val y1 = math.min(env.getMaxY + latPad, 90.0)
-    val phiMax = math.max(math.abs(y0), math.abs(y1))
-    // full longitude span when (a) pole-adjacent — meridians converge, no
-    // bounded lon pad is correct — or (b) the padded range would cross the
-    // ±180 antimeridian: envelopes don't wrap, so a neighborhood that
-    // straddles the seam must widen to the full span or pairs across it
-    // silently vanish from join output. Over-padding costs only
-    // candidates; note the grid path replicates a full-span row into every
-    // covering lon cell (bounded by the ≤8k-cells-per-axis grid floor) —
-    // pole-adjacent/seam-straddling geodesic grid joins pay that
-    // replication, the broadcast path does not.
-    lazy val lonPad = meters / (110000.0 * math.cos(math.toRadians(phiMax)))
-    if (phiMax >= 89.0 ||
-        env.getMinX - lonPad < -180.0 || env.getMaxX + lonPad > 180.0) {
-      env.expandToInclude(-180.0, y0)
-      env.expandToInclude(180.0, y1)
-    } else {
-      env.expandBy(lonPad, latPad)
-    }
-  }
-
-  /** Envelope expansion for a dWithin radius: planar units for the planar
-    * predicate, geodesic meters→degrees for the geodesic family. */
-  def padForRadius(env: Envelope, predicate: String, radius: Double): Unit =
-    if (radius > 0) {
-      if (isGeodesicDWithin(predicate)) padGeodesic(env, radius)
-      else env.expandBy(radius)
-    }
 }

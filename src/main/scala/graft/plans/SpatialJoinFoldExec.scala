@@ -5,11 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, IdentityBroadcastMode, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.locationtech.jts.geom.{Envelope, Geometry}
-import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
-import org.locationtech.jts.index.strtree.STRtree
-
-import graft.core.GeomOps
 
 /** Physical plan for [[SpatialCountJoin]]: broadcast-STRtree spatial join
   * with the match count folded into the probe loop.
@@ -22,8 +17,8 @@ import graft.core.GeomOps
   * aggregate SUMs the partial counts.
   *
   * `predicate` is normalized (LEFT geometry first) exactly as in
-  * [[SpatialJoinExec]]; the same transpose applies when the build side is
-  * the right input.
+  * [[SpatialJoinExec]], and the index build and refine are the same
+  * [[SpatialProbe]]'s.
   */
 case class SpatialJoinFoldExec(
     left: SparkPlan,
@@ -46,67 +41,22 @@ case class SpatialJoinFoldExec(
     if (buildRight) Seq(UnspecifiedDistribution, BroadcastDistribution(IdentityBroadcastMode))
     else Seq(BroadcastDistribution(IdentityBroadcastMode), UnspecifiedDistribution)
 
-  private def test(p: PreparedGeometry, g: Geometry): Boolean = {
-    val name = if (buildRight) SpatialJoinExec.transpose(predicate) else predicate
-    name match {
-      case "intersects" => p.intersects(g)
-      case "contains" => p.contains(g)
-      case "within" => p.within(g)
-      case "covers" => p.covers(g)
-      case "coveredBy" => p.coveredBy(g)
-      case "touches" => p.touches(g)
-      case "overlaps" => p.overlaps(g)
-      case "crosses" => p.crosses(g)
-      case "equalsTopo" => p.getGeometry.equalsTopo(g)
-      case "dWithin" => p.getGeometry.isWithinDistance(g, radius)
-      case n if SpatialJoinExec.isGeodesicDWithin(n) =>
-        SpatialJoinExec.geodesicTest(n, p.getGeometry, g, radius)
-      case other => throw new IllegalStateException(s"unsupported spatial predicate: $other")
-    }
-  }
-
   override protected def doExecute(): RDD[InternalRow] = {
     val (buildPlan, streamPlan) = if (buildRight) (right, left) else (left, right)
     val (buildGeomE, streamGeomE) = if (buildRight) (rightGeom, leftGeom) else (leftGeom, rightGeom)
     val broadcastRows = buildPlan.executeBroadcast[Array[InternalRow]]()
     val buildGeomBound = BindReferences.bindReference(buildGeomE, buildPlan.output)
     val streamGeomBound = BindReferences.bindReference(streamGeomE, streamPlan.output)
-    val r = radius
+    val probe = SpatialProbe(predicate, radius, buildRight)
     val outAttrs = output
     val buildAttrs = buildPlan.output
 
     streamPlan.execute().mapPartitions { iter =>
       val rows = broadcastRows.value
-      val tree = new STRtree()
-      val prep = new PreparedGeometryFactory()
-      var i = 0
-      while (i < rows.length) {
-        val wkb = buildGeomBound.eval(rows(i)).asInstanceOf[Array[Byte]]
-        if (wkb != null) {
-          val g = GeomOps.read(wkb)
-          if (!g.isEmpty)
-            tree.insert(g.getEnvelopeInternal, (Integer.valueOf(i), prep.create(g)))
-        }
-        i += 1
-      }
-      tree.build()
+      val matches = probe.index(rows, buildGeomBound)
       val counts = new Array[Long](rows.length)
       iter.foreach { srow =>
-        val wkb = streamGeomBound.eval(srow).asInstanceOf[Array[Byte]]
-        if (wkb != null) {
-          val sg = GeomOps.read(wkb)
-          if (!sg.isEmpty) {
-            val env = new Envelope(sg.getEnvelopeInternal)
-            SpatialJoinExec.padForRadius(env, predicate, r)
-            val cands = tree.query(env)
-            var c = 0
-            while (c < cands.size()) {
-              val (idx, pg) = cands.get(c).asInstanceOf[(Integer, PreparedGeometry)]
-              if (test(pg, sg)) counts(idx.intValue()) += 1
-              c += 1
-            }
-          }
-        }
+        matches(streamGeomBound.eval(srow).asInstanceOf[Array[Byte]]).foreach(b => counts(b) += 1)
       }
       val joined = new JoinedRow()
       val cntRow = new GenericInternalRow(1)

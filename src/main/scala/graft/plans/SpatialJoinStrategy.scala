@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, Attribute, AttributeSet, Cast, DenseRank, EqualNullSafe, EqualTo, ExprId, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, NamedExpression, PredicateHelper, Rank, RowNumber, SortOrder, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, Attribute, AttributeSet, BinaryComparison, Cast, DenseRank, EqualNullSafe, EqualTo, ExprId, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, NamedExpression, Not, Or, PredicateHelper, Rank, RowNumber, SortOrder, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, Join, LogicalPlan, Project, Window, WindowGroupLimit}
@@ -26,7 +26,9 @@ import org.apache.spark.sql.types.IntegerType
   * sampled from the data at execution time, so an unbroadcastable spatial
   * join never silently degrades to BroadcastNestedLoopJoin.
   *
-  * Remaining conjuncts become a `FilterExec` above the join.
+  * Remaining conjuncts become a `FilterExec` above the join. On the grid
+  * path the ones that cannot raise (see [[absorbable]]) are evaluated inside
+  * the exec instead, before the exact geometry test.
   * `ST_DWithin(a, b, d)` is supported for foldable `d`.
   *
   * Registered per-session by `GeoFunctions.register` through
@@ -37,7 +39,7 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
 
   private val geomOps = Class.forName("graft.core.GeomOps")
   private val geodesy = Class.forName("graft.core.Geodesy")
-  private val supported = SpatialJoinExec.transpose.keySet
+  private val supported = SpatialProbe.transpose.keySet
 
   private def strip(e: Expression): Expression = e match {
     case c: Cast => strip(c.child)
@@ -72,7 +74,7 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
         else if (a.references.nonEmpty && b.references.nonEmpty &&
                  a.references.subsetOf(right.outputSet) && b.references.subsetOf(left.outputSet))
           // P(a∈right, b∈left) ⇒ normalize to transpose(P)(left, right)
-          Some((b, a, SpatialJoinExec.transpose(si.functionName), r, true))
+          Some((b, a, SpatialProbe.transpose(si.functionName), r, true))
         else None
       }
     // distance-comparison shapes: `ST_Distance*(a, b) <= d` is a radius
@@ -97,7 +99,7 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
   private def isDistanceKernel(si: StaticInvoke): Boolean =
     (si.staticObject == geomOps && si.functionName == "distance") ||
       (si.staticObject == geodesy &&
-        SpatialJoinExec.geodesicDistanceToPredicate.contains(si.functionName))
+        SpatialProbe.geodesicDistanceToPredicate.contains(si.functionName))
 
   private def extractRadius(si: StaticInvoke, d: Expression,
                             left: LogicalPlan, right: LogicalPlan, exact: Boolean)
@@ -111,7 +113,7 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
     val (a, b) = (args(0), args(1))
     val pred =
       if (si.staticObject == geomOps) "dWithin"
-      else SpatialJoinExec.geodesicDistanceToPredicate(si.functionName)
+      else SpatialProbe.geodesicDistanceToPredicate(si.functionName)
     if (a.references.nonEmpty && b.references.nonEmpty &&
         a.references.subsetOf(left.outputSet) && b.references.subsetOf(right.outputSet))
       Some((a, b, pred, r, exact))
@@ -309,10 +311,6 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
         // filter to restore exactness on the boundary
         val remaining =
           if (exact) conjuncts.filterNot(_ fastEquals chosen) else conjuncts
-        val narrowed: Option[Seq[Attribute]] = proj.map { pl =>
-          val needed = AttributeSet(pl.flatMap(_.references) ++ remaining.flatMap(_.references))
-          (left.output ++ right.output).filter(needed.contains)
-        }
         val threshold = SQLConf.get.autoBroadcastJoinThreshold
         val lSize = left.stats.sizeInBytes
         val rSize = right.stats.sizeInBytes
@@ -323,24 +321,22 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
         val canLeft = hintLeft || (threshold > 0 && lSize <= threshold)
         val canRight = hintRight || (threshold > 0 && rSize <= threshold)
         val broadcastable = canLeft || canRight
-        // big×big path (round 21): deterministic, subquery-free, KERNEL-FREE
-        // residual conjuncts ride INTO the grid exec and are evaluated in
-        // its probe loop BEFORE the exact JTS refine test — a cheap
-        // inequality like DBSCAN's canonical `a.id < b.id` then skips the
-        // expensive geometry test for the pairs it rejects instead of
-        // filtering rows the refine already paid for. Conjuncts that
-        // invoke kernels (e.g. the strict-< distance residual, which IS a
-        // refine test) stay a FilterExec above the join, where they run on
-        // post-refine survivors only — pushing them below the cheap
-        // prepared-geometry test would invert the cost order.
+        // big×big path (round 21): residual conjuncts that cannot raise ride
+        // INTO the grid exec and are evaluated in its probe loop BEFORE the
+        // exact JTS refine test — a cheap inequality like DBSCAN's canonical
+        // `a.id < b.id` then skips the expensive geometry test for the pairs
+        // it rejects instead of filtering rows the refine already paid for.
+        // Everything else stays a FilterExec above the join, on post-refine
+        // survivors only.
         val (absorbed, residual) =
           if (broadcastable) (Nil, remaining)
-          else remaining.partition(c => c.deterministic && !c.exists {
-            case _: org.apache.spark.sql.catalyst.expressions.PlanExpression[_] => true
-            case _: org.apache.spark.sql.catalyst.expressions.objects.InvokeLike => true
-            case _: org.apache.spark.sql.catalyst.expressions.ScalaUDF => true
-            case _ => false
-          })
+          else remaining.partition(absorbable)
+        // absorbed conjuncts read the exec's full joined row, so only what
+        // the parent and the FilterExec consume must survive the narrowing
+        val narrowed: Option[Seq[Attribute]] = proj.map { pl =>
+          val needed = AttributeSet(pl.flatMap(_.references) ++ residual.flatMap(_.references))
+          (left.output ++ right.output).filter(needed.contains)
+        }
         val exec: SparkPlan =
           if (broadcastable) {
             val buildRight =
@@ -368,5 +364,21 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
         }
         result :: Nil
     }
+  }
+
+  /** A residual conjunct the grid exec may evaluate before its refine
+    * test, i.e. on pairs the literal plan's short-circuiting AND never
+    * evaluates it for: so it must not be able to raise. A positive list —
+    * boolean connectives, null tests, comparisons and IN over attributes
+    * and literals, through casts that cannot fail under ANSI. Arithmetic
+    * (overflow, division by zero), kernels, UDFs and subqueries stay above
+    * the join. */
+  private def absorbable(e: Expression): Boolean = e match {
+    case _: And | _: Or | _: Not | _: IsNull | _: IsNotNull |
+         _: BinaryComparison | _: In | _: InSet =>
+      e.children.forall(absorbable)
+    case c: Cast => Cast.canUpCast(c.child.dataType, c.dataType) && absorbable(c.child)
+    case _: Attribute | _: Literal => true
+    case _ => false
   }
 }

@@ -124,6 +124,32 @@ class KnnJoinSpec extends SparkTestBase {
     }
   }
 
+  test("cell pre-filter key bound: long overflow skips the pre-filter, ANSI on and off") {
+    // the bound sums each unresolved row's covering-cell count; a span or a
+    // product past the long range must read as "too many keys" — not throw
+    // ARITHMETIC_OVERFLOW (ANSI) or wrap negative and pass the guard (legacy)
+    val s = spark
+    val prevAnsi = s.conf.get("spark.sql.ansi.enabled")
+    val maxKeys = 2000000L
+    def bound(spans: Seq[(Long, Long, Long, Long)]): Double =
+      spans.toDF("x0", "x1", "y0", "y1")
+        .agg(SpatialJoin.cellKeyBound(col("x0"), col("x1"), col("y0"), col("y1"), maxKeys))
+        .head().getDouble(0)
+    for (ansi <- Seq("true", "false")) {
+      s.conf.set("spark.sql.ansi.enabled", ansi)
+      try {
+        assert(bound(Seq((0L, 1L, 0L, 2L), (5L, 5L, -1L, -1L))) == 7.0, s"ansi=$ansi: exact when small")
+        // product overflow: 8e18 cells × 2
+        assert(bound(Seq((-4000000000000000000L, 4000000000000000000L, 0L, 1L))) > maxKeys,
+          s"ansi=$ansi: product overflow")
+        // span overflow: x1 - x0 alone exceeds the long range
+        assert(bound(Seq((Long.MinValue, Long.MaxValue, 0L, 0L))) > maxKeys, s"ansi=$ansi: span overflow")
+        // sum overflow: many rows just under the long range each
+        assert(bound(Seq.fill(4)((0L, Long.MaxValue - 1, 0L, 0L))) > maxKeys, s"ansi=$ansi: sum overflow")
+      } finally s.conf.set("spark.sql.ansi.enabled", prevAnsi)
+    }
+  }
+
   test("empty right side yields empty result with the knn schema") {
     val l = Seq((1L, 0.0, 0.0))
     val out = SpatialJoin.knn(pts(l, "lid", "lg"), pts(Nil, "rid", "rg"),

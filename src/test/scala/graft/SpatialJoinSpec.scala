@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.operators.SpatialJoin
-
 class SpatialJoinSpec extends SparkTestBase {
 
   private lazy val points = {
@@ -28,54 +25,77 @@ class SpatialJoinSpec extends SparkTestBase {
     (for { (id, pt) <- collectedPts; (zid, zone) <- collectedZones
            if graft.core.GeomOps.covers(zone, pt) } yield (id, zid)).toSet
 
+  private def pairs(df: org.apache.spark.sql.DataFrame): Array[(Int, Int)] =
+    df.collect().map(r => (r.getInt(0), r.getInt(1)))
+
+  /** runs `body` with the given SQL confs set, restoring the previous values */
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def views(): Unit = {
+    points.createOrReplaceTempView("sj_pts")
+    zones.createOrReplaceTempView("sj_zones")
+  }
+
   test("broadcast STRtree join == nested-loop ground truth") {
-    val got = SpatialJoin.broadcast(points, zones, "pt", "zone", "covers")
-      .select("id", "zid").collect().map(r => (r.getInt(0), r.getInt(1))).toSet
+    views()
+    val q = sql("SELECT /*+ BROADCAST(sj_zones) */ id, zid FROM sj_pts JOIN sj_zones ON ST_Covers(zone, pt)")
+    assert(planOf(q).contains("SpatialJoin"), planOf(q))
+    val got = pairs(q).toSet
     assert(got == expected)
     assert(got.nonEmpty)
   }
 
   test("broadcast goes through a real BroadcastExchange, not a driver collect") {
-    val df = SpatialJoin.broadcast(points, zones, "pt", "zone", "covers",
-      project = Seq("id", "zid"))
-    val plan = df.queryExecution.executedPlan.toString
+    views()
+    val query = "SELECT /*+ BROADCAST(sj_zones) */ id, zid FROM sj_pts JOIN sj_zones ON ST_Covers(zone, pt)"
+    val plan = planOf(sql(query))
     assert(plan.contains("SpatialJoin"), plan)
     assert(plan.contains("BroadcastExchange"), plan)
     // the hint must hold even when stats would disqualify both sides
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val hinted = SpatialJoin.broadcast(points, zones, "pt", "zone", "covers")
-      val p2 = hinted.queryExecution.executedPlan.toString
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val hinted = sql(query)
+      val p2 = planOf(hinted)
       assert(p2.contains("SpatialJoin") && p2.contains("BroadcastExchange"), p2)
-      assert(hinted.select("id", "zid").collect()
-        .map(r => (r.getInt(0), r.getInt(1))).toSet == expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      assert(pairs(hinted).toSet == expected)
+    }
   }
 
   test("grid-partitioned join == ground truth (incl. reference-point dedup)") {
-    val got = SpatialJoin.grid(points, zones, "pt", "zone", cellSize = 4.0)
-      .select("id", "zid").collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-    // grid join refines with intersects; for point-in-rect covers==intersects
-    assert(got == expected)
-    // dedup check: a zone spans multiple cells — no pair may appear twice
-    val all = SpatialJoin.grid(points, zones, "pt", "zone", cellSize = 4.0)
-      .select("id", "zid").collect().map(r => (r.getInt(0), r.getInt(1)))
-    assert(all.length == all.toSet.size)
+    views()
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val q = sql("SELECT id, zid FROM sj_pts JOIN sj_zones ON ST_Intersects(pt, zone)")
+      assert(planOf(q).contains("GridSpatialJoin"), planOf(q))
+      val all = pairs(q)
+      // for point-in-rect, intersects == covers
+      assert(all.toSet == expected)
+      // dedup check: a zone spans multiple cells — no pair may appear twice
+      assert(all.length == all.toSet.size)
+    }
   }
 
   test("dwithin predicate") {
-    val got = SpatialJoin.broadcast(points, zones, "pt", "zone", "dwithin:2.0")
-      .select("id", "zid").collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-    val exp = points.join(zones, call_function("st_dwithin", col("pt"), col("zone"), lit(2.0)))
-      .select("id", "zid").collect().map(r => (r.getInt(0), r.getInt(1))).toSet
+    views()
+    val got = pairs(sql(
+      "SELECT /*+ BROADCAST(sj_zones) */ id, zid FROM sj_pts JOIN sj_zones ON ST_DWithin(pt, zone, 2.0)")).toSet
+    val exp = (for { (id, pt) <- collectedPts; (zid, zone) <- collectedZones
+                     if graft.core.GeomOps.dWithin(pt, zone, 2.0) } yield (id, zid)).toSet
     assert(got == exp)
     assert(got.size > expected.size) // strictly looser than containment
   }
 
   test("empty small side yields empty result, not failure") {
-    val empty = zones.filter("zid < 0")
-    assert(SpatialJoin.broadcast(points, empty, "pt", "zone").count() == 0)
+    points.createOrReplaceTempView("sj_pts")
+    zones.filter("zid < 0").createOrReplaceTempView("sj_zones_none")
+    val q = sql("SELECT /*+ BROADCAST(sj_zones_none) */ id, zid FROM sj_pts JOIN sj_zones_none ON ST_Intersects(zone, pt)")
+    assert(q.count() == 0)
   }
 
   // ── planner strategy: SQL θ-joins auto-plan to SpatialJoinExec ─────────
@@ -165,20 +185,20 @@ class SpatialJoinSpec extends SparkTestBase {
     import org.locationtech.jts.geom.Envelope
     // mid-latitude: lon pad > lat pad by 1/cos(φ)
     val e = new Envelope(10.0, 10.0, 60.0, 60.0)
-    graft.plans.SpatialJoinExec.padGeodesic(e, 111000.0)
+    graft.plans.SpatialProbe.padGeodesic(e, 111000.0)
     val latPad = 60.0 - e.getMinY
     val lonPad = 10.0 - e.getMinX
     assert(latPad > 0.9 && latPad < 1.2, s"latPad $latPad")
     assert(lonPad > latPad * 1.8, s"lon must widen by ~1/cos(61°): $lonPad vs $latPad")
     // pole-adjacent: no bounded lon pad is correct — full span
     val p = new Envelope(5.0, 5.0, 89.5, 89.5)
-    graft.plans.SpatialJoinExec.padGeodesic(p, 50000.0)
+    graft.plans.SpatialProbe.padGeodesic(p, 50000.0)
     assert(p.getMinX <= -180.0 && p.getMaxX >= 180.0, s"$p")
     // antimeridian: a padded range crossing ±180 widens to full span
     // (envelopes don't wrap — a bounded pad would silently drop pairs
     // straddling the seam)
     val a = new Envelope(179.9, 179.9, 0.0, 0.0)
-    graft.plans.SpatialJoinExec.padGeodesic(a, 100000.0)
+    graft.plans.SpatialProbe.padGeodesic(a, 100000.0)
     assert(a.getMinX <= -180.0 && a.getMaxX >= 180.0, s"$a")
   }
 
@@ -199,7 +219,7 @@ class SpatialJoinSpec extends SparkTestBase {
       val dst = graft.core.GeomOps.read(
         graft.core.Geodesy.projectSphere(src, meters * frac, az)).getCoordinate
       val e = new Envelope(lon, lon, lat, lat)
-      graft.plans.SpatialJoinExec.padGeodesic(e, meters)
+      graft.plans.SpatialProbe.padGeodesic(e, meters)
       // haversine is the model the pad serves; the destination point's
       // actual distance is meters*frac <= meters by construction
       assert(e.covers(dst.x, dst.y),
@@ -337,23 +357,6 @@ class SpatialJoinSpec extends SparkTestBase {
       assert(all.toSet == exp)
       assert(all.length == all.toSet.size) // reference-point dedup: no pair twice
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  test("broadcast refuses an oversized build side with a clear error") {
-    val prev = spark.conf.getOption("graft.spatialJoin.maxBuildBytes")
-    spark.conf.set("graft.spatialJoin.maxBuildBytes", "1")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        SpatialJoin.broadcast(points, zones, "pt", "zone")
-      }
-      assert(e.getMessage.contains("maxBuildBytes"))
-      assert(e.getMessage.contains("grid"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("graft.spatialJoin.maxBuildBytes", v)
-        case None => spark.conf.unset("graft.spatialJoin.maxBuildBytes")
-      }
-    }
   }
 
   test("strategy: parent Project narrows the join output (no geometry in rows)") {
@@ -528,6 +531,101 @@ class SpatialJoinSpec extends SparkTestBase {
       s.sparkContext.removeSparkListener(listener)
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
+  }
+
+  test("grid join: a residual that can raise stays above the refine test (ANSI)") {
+    // the literal plan's AND evaluates `a.x / b.d` only for pairs that
+    // intersect. (1, LINESTRING) × (1, POINT(1 9)) shares a grid cell and an
+    // envelope but not a point, and has b.d = 0: a division evaluated inside
+    // the probe loop before the geometry test would raise DIVIDE_BY_ZERO
+    sql("""SELECT aid, x, ST_GeomFromText(wkt) AS g
+           FROM VALUES (1, 10, 'LINESTRING (0 0, 10 10)') AS t(aid, x, wkt)""")
+      .createOrReplaceTempView("ansi_a")
+    sql("""SELECT bid, d, ST_GeomFromText(wkt) AS g
+           FROM VALUES (1, 0, 'POINT (1 9)'), (2, 2, 'POINT (5 5)'), (3, 20, 'POINT (2 2)')
+           AS t(bid, d, wkt)""").createOrReplaceTempView("ansi_b")
+    withConf("spark.sql.ansi.enabled" -> "true", "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val q = sql("""SELECT a.aid, b.bid FROM ansi_a a JOIN ansi_b b
+                     ON ST_Intersects(a.g, b.g) AND a.x / b.d > 1""")
+      val plan = planOf(q)
+      assert(plan.contains("GridSpatialJoin"), plan)
+      assert(plan.contains("Filter"), s"the division must stay a Filter above the join:\n$plan")
+      assert(pairs(q).toSet == Set((1, 2)))
+    }
+  }
+
+  test("predicate parity: every planar predicate agrees on every physical path") {
+    // one geometry list on both sides: shared edges and corners, a polygon
+    // repeated with another start vertex, collinear lines, duplicate
+    // points, a point at exactly the dWithin radius, NULL and EMPTY
+    val wkts = Seq(
+      "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))", "POLYGON ((4 0, 8 0, 8 4, 4 4, 4 0))",
+      "POLYGON ((2 2, 6 2, 6 6, 2 6, 2 2))", "POLYGON ((4 0, 4 4, 0 4, 0 0, 4 0))",
+      "LINESTRING (-1 2, 9 2)", "LINESTRING (0 4, 8 4)", "LINESTRING (4 4, 10 4)",
+      "POINT (4 4)", "POINT (4 4)", "POINT (2 2)", "POINT (9 5)",
+      null, "POLYGON EMPTY", "LINESTRING EMPTY")
+    val rows = wkts.zipWithIndex
+      .map { case (w, i) => s"($i, ${if (w == null) "NULL" else s"'$w'"})" }.mkString(", ")
+    for (side <- Seq("a", "b"))
+      sql(s"SELECT id AS ${side}id, ST_GeomFromText(wkt) AS g FROM VALUES $rows AS t(id, wkt)")
+        .createOrReplaceTempView(s"par_$side")
+    val geoms = wkts.map(w => Option(w).map(new org.locationtech.jts.io.WKTReader().read))
+    val radius = 1.0
+    type Geom = org.locationtech.jts.geom.Geometry
+    val preds: Seq[(String, String, (Geom, Geom) => Boolean)] = Seq(
+      ("intersects", "ST_Intersects(a.g, b.g)", _ intersects _),
+      ("contains", "ST_Contains(a.g, b.g)", _ contains _),
+      ("within", "ST_Within(a.g, b.g)", _ within _),
+      ("covers", "ST_Covers(a.g, b.g)", _ covers _),
+      ("coveredBy", "ST_CoveredBy(a.g, b.g)", _ coveredBy _),
+      ("touches", "ST_Touches(a.g, b.g)", _ touches _),
+      ("overlaps", "ST_Overlaps(a.g, b.g)", _ overlaps _),
+      ("crosses", "ST_Crosses(a.g, b.g)", _ crosses _),
+      ("equalsTopo", "ST_Equals(a.g, b.g)", _ equalsTopo _),
+      ("dWithin", s"ST_DWithin(a.g, b.g, $radius)", _.isWithinDistance(_, radius)))
+    assert(preds.map(_._1).toSet == graft.plans.SpatialProbe.transpose.keySet.filterNot(
+      graft.plans.SpatialProbe.isGeodesicDWithin), "a planar predicate has no parity row")
+    // which side the broadcast exec (row-emitting or count fold) builds
+    def buildRight(q: org.apache.spark.sql.DataFrame): Option[Boolean] = {
+      val plan = q.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      plan.collectFirst {
+        case j: graft.plans.SpatialJoinExec => j.buildRight
+        case f: graft.plans.SpatialJoinFoldExec => f.buildRight
+      }
+    }
+    for ((name, cond, jts) <- preds) {
+      val exp = (for {
+        (Some(ga), i) <- geoms.zipWithIndex; (Some(gb), j) <- geoms.zipWithIndex
+        if jts(ga, gb)
+      } yield (i, j)).toSet
+      assert(exp.nonEmpty, s"$name: the fixture has no matching pair")
+      def joined(hint: String) =
+        sql(s"SELECT $hint aid, bid FROM par_a a JOIN par_b b ON $cond")
+      for ((hint, right) <- Seq(("/*+ BROADCAST(a) */", false), ("/*+ BROADCAST(b) */", true))) {
+        val q = joined(hint)
+        assert(buildRight(q).contains(right), s"$name/$hint: ${planOf(q)}")
+        val got = pairs(q).toSet
+        assert(got == exp, s"$name/$hint: ${got.diff(exp)} extra, ${exp.diff(got)} missing")
+      }
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val q = joined("")
+        assert(planOf(q).contains("GridSpatialJoin"), s"$name/grid: ${planOf(q)}")
+        val all = pairs(q)
+        assert(all.length == all.toSet.size, s"$name/grid: a pair emitted twice")
+        assert(all.toSet == exp, s"$name/grid: ${all.toSet.diff(exp)} extra, ${exp.diff(all.toSet)} missing")
+      }
+      // the fold builds the side that carries the grouping key
+      for ((key, right) <- Seq(("aid", false), ("bid", true))) {
+        val f = sql(s"SELECT $key, COUNT(*) FROM par_a a JOIN par_b b ON $cond GROUP BY $key")
+        assert(buildRight(f).contains(right) && planOf(f).contains("SpatialJoinFold"),
+          s"$name/fold by $key: ${planOf(f)}")
+        val expCounts = exp.groupBy(p => if (right) p._2 else p._1).view.mapValues(_.size.toLong).toMap
+        assert(f.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap == expCounts, s"$name/fold by $key")
+      }
     }
   }
 
